@@ -37,9 +37,13 @@ import zlib
 
 import numpy as np
 
+from manga_translator_spark.functions import load_weights
+
 GLYPH_H = 8
 GLYPH_W = 8
-_WEIGHTS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "glyph_weights.npz")
+_WEIGHTS_FILE = "glyph_weights.npz"
+# the file scripts/gen_glyph_weights.py writes
+_WEIGHTS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), _WEIGHTS_FILE)
 
 # Unknown characters render as this glyph (must be in the alphabet).
 UNKNOWN_CHAR = "?"
@@ -186,8 +190,8 @@ def resize_gray(pixels: np.ndarray, width: int, height: int) -> np.ndarray:
 class GlyphRecognizer:
     """Fixed-weight linear glyph classifier over committed .npz weights."""
 
-    def __init__(self, weights_path: str = _WEIGHTS_PATH):
-        with np.load(weights_path, allow_pickle=False) as z:
+    def __init__(self):
+        with load_weights(_WEIGHTS_FILE) as z:
             self.chars = [str(c) for c in z["chars"]]
             self.weights = z["weights"].astype(np.float32)  # (64, n_classes)
             self.bias = z["bias"].astype(np.float32)  # (n_classes,)

@@ -32,12 +32,14 @@ import os
 
 import numpy as np
 
+from manga_translator_spark.functions import load_weights
+
 CANON_H = 8
 CANON_W = 32
 EMBED_DIM = 16
-_WEIGHTS_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "media_embed_weights.npz"
-)
+_WEIGHTS_FILE = "media_embed_weights.npz"
+# the file scripts/gen_media_embed_weights.py writes
+_WEIGHTS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), _WEIGHTS_FILE)
 
 
 def build_weights() -> dict:
@@ -64,8 +66,8 @@ def build_weights() -> dict:
 class MediaEmbedder:
     """Decode-aware batched feature extractor over committed .npz weights."""
 
-    def __init__(self, weights_path: str = _WEIGHTS_PATH):
-        with np.load(weights_path, allow_pickle=False) as z:
+    def __init__(self):
+        with load_weights(_WEIGHTS_FILE) as z:
             self.proj = z["proj"].astype(np.float32)
         if self.proj.shape != (CANON_H * CANON_W, EMBED_DIM):
             raise ValueError("media embed weight shape mismatch")

@@ -40,9 +40,11 @@ try:  # rule_keep (the fallback oracle) must import even without numpy
 except ImportError:  # pragma: no cover — numpy is baked into the sandbox
     np = None
 
-_WEIGHTS_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "verdict_weights.npz"
-)
+from manga_translator_spark.functions import load_weights
+
+_WEIGHTS_FILE = "verdict_weights.npz"
+# the file scripts/gen_verdict_weights.py writes
+_WEIGHTS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), _WEIGHTS_FILE)
 
 # Keep rule the closed-form weights encode (and the fallback implements).
 MIN_KEEP_LEN = 60
@@ -86,8 +88,8 @@ def build_weights() -> dict:
 class PatchVerdictNet:
     """Fixed-weight linear keep/drop classifier over committed .npz weights."""
 
-    def __init__(self, weights_path: str = _WEIGHTS_PATH):
-        with np.load(weights_path, allow_pickle=False) as z:
+    def __init__(self):
+        with load_weights(_WEIGHTS_FILE) as z:
             self.weights = z["weights"].astype(np.float32)  # (n_features, 2)
             self.bias = z["bias"].astype(np.float32)  # (2,)
             self.features = [str(f) for f in z["features"]]

@@ -376,7 +376,7 @@ def dedup_clusters(
         )
         changed = new_labels.agg(F.sum("chg")).collect()[0][0]
         labels = new_labels.select("id", "label")
-        if changed == 0:
+        if not changed:  # the sum over zero edges is NULL: nothing changed
             break
     return (
         docs.select("doc_id")

@@ -10,7 +10,13 @@ acceptable, so the engine adds what the north_rule demands:
   lineage table and recomputes nothing;
 * every bucket group appends a lineage row ``(run_id, bucket, status,
   rows_in, rows_out, wall_ms)`` — the per-partition metrics feed the bench
-  report and make stragglers/skew visible.
+  report and make stragglers/skew visible.  ``rows_in`` and ``rows_out``
+  come from ``DataFrame.observe`` on the group's input and on the frame
+  handed to the write, so the counts ride the write job itself instead of
+  a read-back of the written parquet; the append goes through Arrow, so no
+  Python worker runs for it.  A group costs the jobs of its write plus one
+  append (two jobs in the default plan); a first run finds no lineage
+  table from a file-system listing, with no job at all.
 
 Physical notes: one Spark job per bucket *group* (``buckets_per_job``), not
 per bucket — pruning by a bucket predicate on a bucket-partitioned parquet
@@ -25,25 +31,62 @@ import time
 import uuid
 from typing import TYPE_CHECKING
 
+import pandas as pd
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from manga_translator_spark.operators.fused import DictSumParam, create_stage_metrics
+from manga_translator_spark.operators.fused import create_stage_metrics
 from manga_translator_spark.plans.pipeline import PipelineConfig, extract
 from manga_translator_spark.schema import LINEAGE_SCHEMA
 from manga_translator_spark.sources.pages import with_bucket
 
 if TYPE_CHECKING:
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import Column, DataFrame, SparkSession
+
+# header magic + footer length + footer magic: the smallest parquet file
+_PARQUET_MIN_BYTES = 12
+
+
+def _lineage_exists(spark: "SparkSession", path: str) -> bool:
+    """Whether a lineage table exists at ``path``, from a Hadoop FileSystem
+    listing (no Spark job, and no FileStreamSink WARN for an absent path).
+
+    Raises on a data file too short to be parquet: Spark's reader skips
+    such a file without a word, so a truncated table would lose its
+    ``done`` rows and the run would redo those buckets and append them
+    again.  Files Spark does read fail the job that reads them."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return False
+    for st in fs.listStatus(jpath):
+        name = st.getPath().getName()
+        if st.isFile() and not name.startswith(("_", ".")) and st.getLen() < _PARQUET_MIN_BYTES:
+            raise OSError(f"unreadable lineage table {path}: {name} is {st.getLen()} bytes")
+    return True
+
+
+def _lineage_frame(spark: "SparkSession", rows: list[tuple]) -> "DataFrame":
+    """Lineage rows as a frame built from pandas through Arrow: the batches
+    go straight to the JVM, so no Python worker runs (``stage_ms`` stays a
+    column of dicts)."""
+    pdf = pd.DataFrame(rows, columns=LINEAGE_SCHEMA.fieldNames())
+    return spark.createDataFrame(pdf, schema=LINEAGE_SCHEMA)
 
 
 def read_lineage(spark: "SparkSession", path: str) -> "DataFrame":
-    try:
+    """The lineage table at ``path``; an empty one when none exists yet.
+
+    Only an absent table means a first run.  One that exists but cannot be
+    read raises, here or in the action that reads it."""
+    if _lineage_exists(spark, path):
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-    except Exception:  # first run: table does not exist yet
-        return spark.createDataFrame([], schema=LINEAGE_SCHEMA)
+    return _lineage_frame(spark, [])
 
 
 def done_buckets(spark: "SparkSession", lineage_path: str) -> set[int]:
+    if not _lineage_exists(spark, lineage_path):
+        return set()  # first run, answered by the listing: no job
     rows = (
         read_lineage(spark, lineage_path)
         .filter(F.col("status") == "done")
@@ -55,16 +98,26 @@ def done_buckets(spark: "SparkSession", lineage_path: str) -> set[int]:
 
 
 def _append_lineage(spark: "SparkSession", path: str, rows: list[tuple]) -> None:
-    spark.createDataFrame(rows, schema=LINEAGE_SCHEMA).write.mode("append").parquet(path)
+    _lineage_frame(spark, rows).coalesce(1).write.mode("append").parquet(path)
+
+
+def _bucket_counts(group: list[int]) -> list["Column"]:
+    """One row count per bucket of ``group``, for ``DataFrame.observe``."""
+    return [F.count_if(F.col("bucket") == b).alias(str(b)) for b in group]
+
+
+def _observed(obs: Observation) -> dict[int, int]:
+    return {int(b): int(n) for b, n in obs.get.items()}
 
 
 def _failed_tasks_in_group(spark: "SparkSession", group_id: str) -> int | None:
     """Failed-task count across all jobs run under ``group_id``.
 
-    Accumulators double-count when tasks retry; zero failed tasks means the
-    accumulator-derived rows_in is exact.  Uses the JVM status tracker
-    (public SparkStatusTracker API); returns None when the probe itself is
-    unavailable so callers can flag the count approximate instead.
+    Observed counts can double-count when tasks of a shuffle map stage
+    retry; zero failed tasks means the observed rows_in is exact.  Uses the
+    JVM status tracker (public SparkStatusTracker API); returns None when
+    the probe itself is unavailable so callers can flag the count
+    approximate instead.
     """
     try:
         tracker = spark.sparkContext._jsc.sc().statusTracker()
@@ -100,9 +153,9 @@ def run_extraction(
     ``fail_buckets`` is a test hook: those bucket groups raise mid-run,
     exercising the resume path (a 'failed' row is recorded; a re-run picks
     the group up again).  ``transform`` swaps the per-group plan (e.g.
-    ``operators.pdf_extract.extract_any`` for mixed html/pdf tables);
-    custom transforms take the exact rows_in count path, since the fused
-    accumulator only instruments the default pipeline.  Returns run_id.
+    ``operators.pdf_extract.extract_any`` for mixed html/pdf tables); its
+    rows are counted the same way as the default pipeline's.  Returns
+    run_id.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     bucketed = with_bucket(pages, n_buckets)
@@ -114,17 +167,17 @@ def run_extraction(
         t0 = time.monotonic()
         part = bucketed.filter(F.col("bucket").isin(group))
         stage_acc = create_stage_metrics(spark)
-        # rows_in counts accumulate inside the fused parse pass itself (the
-        # bucket column rides through the UDF) — no extra input-scan job
-        rows_acc = spark.sparkContext.accumulator({}, DictSumParam())
-        stage_acc["rows_in_by_bucket"] = rows_acc
         group_id = f"lineage_{run_id}_{lo}"
         spark.sparkContext.setJobGroup(group_id, "bucketed extraction group")
         try:
             if fail_buckets and set(group) & fail_buckets:
                 raise RuntimeError(f"injected failure for buckets {sorted(set(group) & fail_buckets)}")
-            result = (transform or extract)(part, config, metrics=stage_acc)
-            if "bucket" not in result.columns:  # staged configs: re-key
+            # rows_in and rows_out are observed on the group's input and on
+            # the frame handed to the write: the counts ride the write job
+            # itself, with no count or read-back job
+            seen_in, seen_out = Observation(), Observation()
+            result = (transform or extract)(part.observe(seen_in, *_bucket_counts(group)), config, metrics=stage_acc)
+            if "bucket" not in result.columns:
                 # bucket is a pure function of url (with_bucket), so
                 # recompute it instead of joining back on url — a url
                 # fetched k times would k^2-multiply through the join
@@ -133,40 +186,27 @@ def run_extraction(
             # dynamic partition overwrite: a retried group replaces exactly
             # its own bucket partitions — idempotent under crash/retry
             (
-                result.write.mode("overwrite")
+                result.observe(seen_out, *_bucket_counts(group))
+                .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(out_path)
             )
-            rows_in = {int(k): int(v) for k, v in rows_acc.value.items()}
-            # accumulator counts double on task retries/speculation: zero
-            # failed tasks in this job group => exact; retries => recount
-            # exactly (one pruned scan, only on the rare failure path);
-            # tracker unavailable => keep the value but flag approximate.
+            # rows_out is observed in the write's result stage, where a
+            # retried task's update is merged once.  rows_in sits there too
+            # unless the plan shuffles, and a map stage may merge a retried
+            # task twice: zero failed tasks in this job group => exact;
+            # retries => recount exactly (one pruned scan, only on the rare
+            # failure path); tracker unavailable => keep the value but flag
+            # approximate.
+            rows_in, rows_out = _observed(seen_in), _observed(seen_out)
             failed = _failed_tasks_in_group(spark, group_id)
             rows_in_exact = failed == 0
-            if transform is not None or not rows_in or (failed is not None and failed > 0):
-                # staged path (no fused accumulator) or retried tasks:
-                # take the exact count
-                rows_in = {
-                    r["bucket"]: r["count"]
-                    for r in part.groupBy("bucket").count().collect()
-                }
+            if failed:
+                rows_in = {r["bucket"]: r["count"] for r in part.groupBy("bucket").count().collect()}
                 rows_in_exact = True
-            # rows_out from the parquet just written (footer metadata count —
-            # no recompute of the pipeline)
-            rows_out = {
-                r["bucket"]: r["count"]
-                for r in spark.read.parquet(out_path)
-                .filter(F.col("bucket").isin(group))
-                .groupBy("bucket")
-                .count()
-                .collect()
-            }
             wall = int((time.monotonic() - t0) * 1000)
-            stage_ms = {
-                k: int(v.value) for k, v in stage_acc.items() if k != "rows_in_by_bucket"
-            }
+            stage_ms = {k: int(v.value) for k, v in stage_acc.items()}
             _append_lineage(
                 spark,
                 lineage_path,

@@ -148,3 +148,35 @@ if __name__ == "__main__":
     import sys
 
     sys.exit(pytest.main([__file__, "-x", "-q"]))
+
+
+def test_weights_load_from_shipped_zip(tmp_path):
+    """Workers that import the package from session._ship_package's zip
+    (``--py-files``) load the committed weights from inside it."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    archive = shutil.make_archive(
+        str(tmp_path / "pkg"), "zip", root_dir=repo, base_dir="manga_translator_spark"
+    )
+    code = f"""
+import sys
+sys.path.insert(0, {archive!r})
+import manga_translator_spark
+assert manga_translator_spark.__file__.startswith({archive!r}), manga_translator_spark.__file__
+from manga_translator_spark.corpus import make_png
+from manga_translator_spark.functions.glyph_model import GlyphRecognizer, decode_png_gray
+from manga_translator_spark.functions.media_embed import MediaEmbedder
+from manga_translator_spark.functions.verdict_model import PatchVerdictNet
+MediaEmbedder(), PatchVerdictNet()
+print(GlyphRecognizer().infer_arrays([decode_png_gray(make_png("Zip 7"))])[0])
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120
+    )
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == "Zip 7"

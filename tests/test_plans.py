@@ -555,3 +555,30 @@ def test_token_surprise_aggregates_map_side(spark, tmp_path):
         assert "TakeOrderedAndProject" in capped, capped  # scalable top-N
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_dedup_clusters_zero_edges_matches_twin(spark, tmp_path):
+    """A corpus with no LSH collisions has no edges: the convergence sum is
+    NULL, which must end the loop (not run it to max_iters) and give one
+    cluster per doc, as the DuckDB twin does."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    n = 6
+    texts = [" ".join(f"w{d}x{i}" for i in range(30)) for d in range(n)]
+    pd.DataFrame(
+        {
+            "doc_id": range(n),
+            "text": texts,
+            "lang": ["en"] * n,
+            "source": ["web"] * n,
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
+    got = {tuple(r) for r in entry.queries()["dedup_clusters"](spark, str(tmp_path)).collect()}
+    assert got == {(d, d) for d in range(n)}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')")
+    assert {tuple(r) for r in con.execute(entry.oracle_sql()["dedup_clusters"]).fetchall()} == got
